@@ -144,9 +144,9 @@ def cmd_dedup(args: argparse.Namespace) -> None:
     exact_edges = ckpt.stage("exact_edges", _edges)
     # bucket(64, doc_id): the verify stage's payload joins read this
     # co-located — Iceberg bucket transform on a cluster, native Spark
-    # bucketed table on the Parquet backend — so the shuffle route the
-    # size dispatch selects above BROADCAST_PAIRS_MAX_ROWS scans the
-    # signatures with no Exchange (PLANS.md `bucketed_verify` audit)
+    # bucketed table on the Parquet backend.  AQE picks the join; the
+    # bucketed layout removes the Exchanges on the signature scans
+    # (PLANS.md `bucketed_verify` audit)
     sigs = ckpt.stage("signatures",
                       lambda: build_stages(reps, cfg).signatures,
                       bucket_by=(64, "doc_id"))

@@ -5,7 +5,6 @@ from distributed_lsh_spark.functions.text import (
 )
 from distributed_lsh_spark.functions.hashing import (
     with_minhash,
-    with_simhash,
     band_keys,
 )
 
@@ -14,6 +13,5 @@ __all__ = [
     "shingle_strings",
     "with_shingle_hashes",
     "with_minhash",
-    "with_simhash",
     "band_keys",
 ]

@@ -1,4 +1,5 @@
-"""MinHash signatures, SimHash fingerprints, LSH band keys.
+"""MinHash signatures and LSH band keys (SimHash lives in
+functions/signature.py).
 
 Reference parity map (citations under /root/reference/):
   * The reference's hash family h_{i,j}(v) = a.v + b over Gaussian a
@@ -132,40 +133,6 @@ def with_minhash(df: DataFrame, cfg: DedupConfig, shingles_col: str = "shingles"
               .drop("_h31")
         )
     return df.withColumn(out, minhash_pandas_udf(cfg)(F.col(shingles_col)))
-
-
-# ---------------------------------------------------------------- SimHash
-
-def simhash_pandas_udf(bits: int = 64):
-    """64-bit SimHash over the shingle-hash array (Arrow-vectorized NumPy).
-
-    bit j of the fingerprint = 1 iff sum over shingle hashes h of
-    (+1 if bit j of h else -1) > 0.  Per-bit majority needs a transpose the
-    JVM expression language handles poorly, so this is a genuine pandas-UDF
-    case (SURVEY.md §2.8): unpackbits over the uint64 view, one matmul-free
-    reduction per batch, no per-row Python.
-    """
-    assert bits == 64
-
-    @F.pandas_udf(T.LongType())
-    def _simhash(shingles: pd.Series) -> pd.Series:
-        out = np.zeros(len(shingles), dtype=np.uint64)
-        for i, s in enumerate(shingles):  # row loop only to handle ragged arrays;
-            if not len(s):                # inner work is vectorized numpy
-                continue
-            h = np.asarray(s, dtype=np.int64).astype(np.uint64)
-            b = np.unpackbits(h.view(np.uint8).reshape(-1, 8), axis=1, bitorder="little")
-            votes = 2 * b.sum(axis=0, dtype=np.int64) - len(s)  # (+1/-1 majority)
-            fp_bits = (votes > 0).astype(np.uint8)
-            out[i] = np.packbits(fp_bits, bitorder="little").view(np.uint64)[0]
-        return pd.Series(out.astype(np.int64))
-
-    return _simhash
-
-
-def with_simhash(df: DataFrame, cfg: DedupConfig, shingles_col: str = "shingles",
-                 out: str = "simhash") -> DataFrame:
-    return df.withColumn(out, simhash_pandas_udf(cfg.simhash_bits)(F.col(shingles_col)))
 
 
 # ---------------------------------------------------------------- banding

@@ -155,8 +155,7 @@ def lsh_ensemble_candidates(docs: DataFrame, *, tau: float = 0.8,
 def containment_pairs(docs: DataFrame, *,
                       tau: float = 0.8, df_cap: int | None = 2000,
                       shingles_col: str = "shingles",
-                      candidates: DataFrame | None = None,
-                      broadcast_pairs: bool = False) -> DataFrame:
+                      candidates: DataFrame | None = None) -> DataFrame:
     """docs(doc_id, shingles) -> (id_a, id_b, containment, jaccard,
     contained_id) for pairs with containment >= tau.
 
@@ -165,12 +164,10 @@ def containment_pairs(docs: DataFrame, *,
     mutual containment, either label is true).  `jaccard` rides along so
     consumers can see which pairs a Jaccard threshold would have kept.
 
-    `broadcast_pairs` defaults FALSE: the candidate volume is
-    corpus-dependent and unbounded (a dup-heavy corpus explodes it past
-    the broadcast budget — the ngram operator makes the same choice),
-    and AQE still converts the joins to broadcast at runtime when it
-    measures the pair list small.  Opt in only for pair sets known
-    small a priori (it adds the semi-join payload prune).
+    The payload joins are plain joins: AQE picks their strategy from
+    runtime stats (a small candidate list becomes a broadcast), and a docs
+    checkpoint bucketed by doc_id removes the Exchanges on the payload
+    scans.
     """
     if candidates is None:
         shd = docs.select("doc_id", F.explode(shingles_col).alias("g"))
@@ -192,13 +189,7 @@ def containment_pairs(docs: DataFrame, *,
                         F.col(shingles_col).alias("_sh_a"))
     db = payload.select(F.col("doc_id").alias("id_b"),
                         F.col(shingles_col).alias("_sh_b"))
-    if broadcast_pairs:
-        candidates = candidates.persist()   # 2 broadcast builds read it
-        db = db.join(F.broadcast(candidates.select("id_b").distinct()),
-                     "id_b", "left_semi")
-        joined = F.broadcast(candidates).join(da, "id_a").join(db, "id_b")
-    else:
-        joined = candidates.join(da, "id_a").join(db, "id_b")
+    joined = candidates.join(da, "id_a").join(db, "id_b")
 
     # sizes are >= 1 whenever a pair exists (a candidate shares >= 1
     # shingle; min_tokens=1 gives every doc >= 1 whole-doc shingle), so

@@ -94,20 +94,6 @@ def log_ratios_from_counts(rawc: DataFrame, tgtc: DataFrame,
             .select("fid", lr.alias("lr_micro")))
 
 
-def dsir_log_ratios(raw: DataFrame, target: DataFrame,
-                    dim: int = DSIR_DIM, id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
-    """Learn the DSIR table: (fid, lr_micro) for every hash bucket in
-    [0, dim) — lr_micro = round((ln p_t(fid) - ln p_r(fid)) * 1e6) under
-    add-one-smoothed hashed-n-gram multinomials.  DIM rows; broadcast it.
-    """
-    rawc = (_doc_features(raw, dim, id_col, text_col)
-            .groupBy("fid").agg(F.sum("m").alias("cr")))
-    tgtc = (_doc_features(target, dim, id_col, text_col)
-            .groupBy("fid").agg(F.sum("m").alias("ct")))
-    return log_ratios_from_counts(rawc, tgtc, dim)
-
-
 def score_features(feats: DataFrame, lrs: DataFrame,
                    ids: DataFrame) -> DataFrame:
     """(doc_id, n_grams, logw_micro, avg_logw, key_micro) from per-doc

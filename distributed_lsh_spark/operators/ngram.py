@@ -46,5 +46,4 @@ def ngram_jaccard_pairs(docs: DataFrame, cfg: DedupConfig,
               .select(F.col("a.doc_id").alias("id_a"),
                       F.col("b.doc_id").alias("id_b"))
               .dropDuplicates(["id_a", "id_b"]))
-    return verify_pairs(pairs, docs, cfg, shingles_col=shingles_col,
-                        broadcast_pairs=False)
+    return verify_pairs(pairs, docs, cfg, shingles_col=shingles_col)

@@ -21,94 +21,25 @@ from pyspark.sql import functions as F
 
 from distributed_lsh_spark.conf import DedupConfig
 
-#: Auto-dispatch threshold: pair lists at or under this many rows ride the
-#: broadcast plan (two longs/row -> ~16 MB raw at the cap, well inside any
-#: executor's broadcast budget); bigger lists — at 10^12 docs the dup-edge
-#: set is ~10^10-10^11 rows, far past ANY broadcast budget — take the
-#: shuffle join, which on a cluster becomes storage-partitioned
-#: (no-Exchange) when the docs checkpoint is bucketed by doc_id (Iceberg
-#: bucket(N, doc_id) — sources/checkpoint.py).  Kept far above the sandbox
-#: ladder's ~155k-edge corpus so the scaling evidence measures the same
-#: plan production takes at matched pair density.
-BROADCAST_PAIRS_MAX_ROWS = 1_000_000
-
 
 def verify_pairs(pairs: DataFrame, docs: DataFrame, cfg: DedupConfig,
-                 shingles_col: str = "shingles", simhash_col: str | None = None,
-                 keep_below_threshold: bool = False,
-                 broadcast_pairs: bool | None = None,
-                 n_pairs: int | None = None) -> DataFrame:
-    """pairs(id_a, id_b) x docs(doc_id, shingles[, simhash]) ->
-    (id_a, id_b, jaccard[, hamming]) filtered at cfg.jaccard_threshold.
+                 shingles_col: str = "shingles",
+                 keep_below_threshold: bool = False) -> DataFrame:
+    """pairs(id_a, id_b) x docs(doc_id, shingles) ->
+    (id_a, id_b, jaccard) filtered at cfg.jaccard_threshold.
 
-    `broadcast_pairs=None` (default) SIZE-DISPATCHES: the pair list is
-    pinned with a localCheckpoint and counted (the checkpoint leaf
-    truncates the lineage every downstream consumer replans; the
-    candidate plan had to run once anyway), then routed to the
-    broadcast plan at or under
-    BROADCAST_PAIRS_MAX_ROWS rows, the shuffle join above — same routing
-    pattern as operators/vector_ann.cosine_pairs and
-    operators/connected_components.  `n_pairs` is an optional size hint
-    (e.g. a checkpoint-manifest row count) that skips the routing count.
-    Pass True/False to force a plan (True: the dup-pair set is orders of
-    magnitude smaller than the corpus, and a sort-merge join would
-    otherwise shuffle+sort the WIDE side — docs with their shingle
-    arrays — twice.  False: pair sets too big to broadcast; bucket the
-    docs checkpoint by doc_id (Iceberg bucket(N, doc_id)) so the payload
-    joins are co-located).  The chosen route is recorded on
-    `verify_pairs.last_route` ('broadcast' | 'shuffle') for tests and
-    metrics.
+    One plan: the pair list joins the payload on id_a, then on id_b.  AQE
+    picks each join's strategy from runtime stats (a small pair list
+    becomes a broadcast), and a docs checkpoint bucketed by doc_id
+    (sources/checkpoint.py) removes the Exchanges on the payload scans.
     """
-    cols = ["doc_id", shingles_col] + ([simhash_col] if simhash_col else [])
-    payload = docs.select(*cols)
-
-    da = payload.select(
-        F.col("doc_id").alias("id_a"), F.col(shingles_col).alias("_sh_a"),
-        *([F.col(simhash_col).alias("_sim_a")] if simhash_col else []))
-    db = payload.select(
-        F.col("doc_id").alias("id_b"), F.col(shingles_col).alias("_sh_b"),
-        *([F.col(simhash_col).alias("_sim_b")] if simhash_col else []))
-
-    pinned = False
-    if broadcast_pairs is None:
-        # localCheckpoint (which under AQE executes the candidate subplan
-        # as its own job) + a leaf-scan count.  Deliberately NOT a lazy
-        # persist pin: the checkpoint LEAF is load-bearing — it truncates
-        # the lineage every downstream consumer replans.  With a persist
-        # here on top of the persisted band/signature caches, funnel-style
-        # callers plan the whole nested InMemoryRelation tree once per
-        # downstream action; a matched-load A/B measured the all-persist
-        # variant +1.2-1.4 s on each funnel composition, and restoring
-        # this ONE leaf recovered it (either this leaf or the band leaf
-        # suffices; this is the smaller frame).
-        pairs = pairs.localCheckpoint(eager=False)
-        pinned = True
-        if n_pairs is None:
-            n_pairs = pairs.count()
-        broadcast_pairs = n_pairs <= BROADCAST_PAIRS_MAX_ROWS
-    verify_pairs.last_route = "broadcast" if broadcast_pairs else "shuffle"
-
-    if broadcast_pairs:
-        # Broadcast ONLY the bare pair list (two longs per row) for the
-        # first join — the docs side streams with no shuffle.  The second
-        # join must NOT be broadcast: its left side carries the _sh_a
-        # arrays (hundreds of MB at modest pair counts — broadcasting it
-        # measured 4 minutes of driver serialization at 400k docs).
-        # Instead, semi-join-prune the wide docs side down to ids that
-        # actually appear in pairs (a broadcast of bare longs) so the one
-        # shuffle join moves only needed payloads.
-        # pairs feeds TWO broadcast builds (the prune + the join); the
-        # pin stops the whole upstream candidate plan from
-        # executing once per build (measured ~2x the verify stage at 400k).
-        if not pinned:
-            pairs = pairs.localCheckpoint(eager=False)
-        db = db.join(F.broadcast(pairs.select("id_b").distinct()),
-                     "id_b", "left_semi")
-        joined = F.broadcast(pairs).join(da, "id_a").join(db, "id_b")
-    else:
-        joined = pairs.join(da, "id_a").join(db, "id_b")
+    payload = docs.select("doc_id", shingles_col)
+    da = payload.select(F.col("doc_id").alias("id_a"),
+                        F.col(shingles_col).alias("_sh_a"))
+    db = payload.select(F.col("doc_id").alias("id_b"),
+                        F.col(shingles_col).alias("_sh_b"))
     out = (
-        joined
+        pairs.join(da, "id_a").join(db, "id_b")
         .withColumn("_inter", F.size(F.array_intersect("_sh_a", "_sh_b")))
         .withColumn(
             "jaccard",
@@ -116,31 +47,18 @@ def verify_pairs(pairs: DataFrame, docs: DataFrame, cfg: DedupConfig,
              .otherwise(F.col("_inter") /
                         (F.size("_sh_a") + F.size("_sh_b") - F.col("_inter"))))
     )
-    if simhash_col:
-        out = out.withColumn("hamming", F.bit_count(F.col("_sim_a").bitwiseXOR(F.col("_sim_b"))))
     if not keep_below_threshold:
         out = out.where(F.col("jaccard") >= cfg.jaccard_threshold)
-    keep = ["id_a", "id_b", "jaccard"] + (["hamming"] if simhash_col else [])
-    return out.select(*keep)
+    return out.select("id_a", "id_b", "jaccard")
 
 
 def hamming_pairs(pairs: DataFrame, docs: DataFrame, cfg: DedupConfig,
-                  simhash_col: str = "simhash",
-                  broadcast_pairs: bool | None = None,
-                  n_pairs: int | None = None) -> DataFrame:
+                  simhash_col: str = "simhash") -> DataFrame:
     """SimHash path: keep pairs with Hamming distance <= cfg.hamming_threshold.
 
-    Same size dispatch as `verify_pairs`: None (default) counts a pinned
-    pair list and broadcasts only at or under BROADCAST_PAIRS_MAX_ROWS."""
+    Same two payload joins as `verify_pairs`."""
     da = docs.select(F.col("doc_id").alias("id_a"), F.col(simhash_col).alias("_sim_a"))
     db = docs.select(F.col("doc_id").alias("id_b"), F.col(simhash_col).alias("_sim_b"))
-    if broadcast_pairs is None:
-        pairs = pairs.localCheckpoint(eager=False)  # leaf pin (see verify_pairs)
-        if n_pairs is None:
-            n_pairs = pairs.count()      # one job: materialize + count
-        broadcast_pairs = n_pairs <= BROADCAST_PAIRS_MAX_ROWS
-    if broadcast_pairs:
-        pairs = F.broadcast(pairs)
     return (
         pairs.join(da, "id_a").join(db, "id_b")
         .withColumn("hamming", F.bit_count(F.col("_sim_a").bitwiseXOR(F.col("_sim_b"))))

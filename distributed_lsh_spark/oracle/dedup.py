@@ -101,7 +101,8 @@ def oph_sig(shingles: list[int], cfg: DedupConfig) -> list[int]:
 
 
 def simhash_fp(shingles: list[int], bits: int = 64) -> int:
-    """Signed 64-bit SimHash, identical to functions.hashing.simhash_pandas_udf."""
+    """Signed 64-bit SimHash, identical to the simhash column of
+    functions/signature.py."""
     if not shingles:
         return 0
     votes = [0] * bits

@@ -16,8 +16,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from distributed_lsh_spark.conf import DedupConfig, DEFAULT_CONFIG
-from distributed_lsh_spark.functions.text import with_shingle_hashes
-from distributed_lsh_spark.functions.hashing import with_minhash, with_simhash, band_keys
+from distributed_lsh_spark.functions.hashing import band_keys
+from distributed_lsh_spark.functions.signature import with_signatures
 from distributed_lsh_spark.operators.candidates import candidate_pairs
 from distributed_lsh_spark.operators.verify import verify_pairs
 from distributed_lsh_spark.operators.connected_components import connected_components
@@ -57,7 +57,6 @@ class DedupStages:
 
 def build_stages(df: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG,
                  id_col: str = "doc_id", text_col: str = "text",
-                 minhash_impl: str = "fused", with_simhash_col: bool = False,
                  persist: bool = False, input_partitions: int | None = 0,
                  probe_partitions: bool = True) -> DedupStages:
     """`persist=True` caches the shingled docs (consumed by both verify-join
@@ -99,17 +98,10 @@ def build_stages(df: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG,
     if input_partitions and (not probe_partitions
                              or base.rdd.getNumPartitions() < input_partitions):
         base = base.repartition(input_partitions)
-    if minhash_impl == "fused":
-        # default: one Arrow-vectorized pass for shingles+minhash+simhash
-        # (Spark HOFs are interpreted — see functions/signature.py)
-        from distributed_lsh_spark.functions.signature import with_signatures
-        sigs = with_signatures(base, cfg)
-        docs = sigs.select("doc_id", "text", "shingles")
-    else:
-        docs = with_shingle_hashes(base, text_col="text", k=cfg.shingle_k)
-        sigs = with_minhash(docs, cfg, impl=minhash_impl)
-        if with_simhash_col:
-            sigs = with_simhash(sigs, cfg)
+    # one Arrow-vectorized pass for shingles+minhash+simhash
+    # (Spark HOFs are interpreted — see functions/signature.py)
+    sigs = with_signatures(base, cfg)
+    docs = sigs.select("doc_id", "text", "shingles")
     if persist:
         # ONE cache at the signatures level: the scan->shingle->minhash chain
         # stays fused in a single codegen stage and runs exactly once; the
@@ -121,7 +113,20 @@ def build_stages(df: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG,
         docs = sigs.select("doc_id", "text", "shingles")
     bands = band_keys(sigs, cfg)
     pairs = candidate_pairs(bands, cfg)
-    verified = verify_pairs(pairs, docs, cfg)
+    # Over the persisted signatures, verify reads the pair list through a
+    # lazy localCheckpoint LEAF, deliberately NOT a persist pin: the leaf
+    # truncates the lineage every downstream consumer replans.  With a
+    # persist here on top of the persisted band/signature caches,
+    # funnel-style callers plan the whole nested InMemoryRelation tree once
+    # per downstream action; a matched-load A/B measured the all-persist
+    # variant +1.2-1.4 s on each funnel composition, and this ONE leaf
+    # recovered it (either this leaf or the band leaf suffices; this is
+    # the smaller frame).  Without the cache there is no nested tree, and
+    # the leaf only costs a job boundary: under AQE the RDD conversion
+    # runs the candidate stages at once, measured +0.6 s on the n-gram
+    # verify at sf0.1.
+    verified = verify_pairs(
+        pairs.localCheckpoint(eager=False) if persist else pairs, docs, cfg)
     return DedupStages(docs=docs, signatures=sigs, bands=bands,
                        pairs=pairs, verified=verified)
 

@@ -240,9 +240,9 @@ class CheckpointManager:
               partition_by: list[str] | None = None,
               bucket_by: tuple[int, str] | None = None) -> DataFrame:
         """`bucket_by=(N, col)`: bucketed layout so downstream joins on
-        `col` are storage-partitioned/co-located — the pairing for the
-        verify stage's shuffle route (verify_pairs broadcast_pairs=False /
-        auto-dispatch above BROADCAST_PAIRS_MAX_ROWS).  Iceberg backend:
+        `col` are storage-partitioned/co-located: AQE picks the verify
+        stage's payload joins, and the bucketed layout removes their
+        Exchanges on this table's scans.  Iceberg backend:
         hidden-partition bucket(N, col) transform.  Parquet backend: a
         native Spark bucketed table (same co-location contract, session
         catalog carries the metadata)."""
@@ -369,8 +369,3 @@ def _df_stats(df: DataFrame) -> tuple[int, str, dict[int, int]]:
     total = sum(part_rows.values())
     fp = sum(int(r["fp"]) for r in rows)
     return total, str(fp), part_rows
-
-
-def _df_fingerprint(df: DataFrame) -> str:
-    """Order-insensitive content hash over all columns (overflow-safe)."""
-    return _df_stats(df)[1]

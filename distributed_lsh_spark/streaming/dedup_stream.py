@@ -17,7 +17,7 @@ joins its freshly-computed band keys against stored history keys (a
 columnar scan of 3 longs/row) and never re-runs the signature UDF or
 band_keys over old documents.  The only history touched besides the index
 scan is the verify stage's payload fetch for docs that actually collided
-(semi-join pruned inside verify_pairs).
+(verify_pairs' payload joins; AQE picks their strategy per batch).
 
 foreachBatch (not a streaming join) because the index side must be
 unbounded and self-growing — Spark's stream-stream join would force
@@ -217,12 +217,10 @@ def incremental_dedup_stream(spark: SparkSession, input_dir: str, state_dir: str
             pairs = cross.unionByName(within) \
                          .where(F.col("id_a") != F.col("id_b")) \
                          .dropDuplicates(["id_a", "id_b"])
-            # broadcast_pairs=True: per-micro-batch candidate pair counts
-            # are bounded far below BROADCAST_PAIRS_MAX_ROWS (a batch only
-            # pairs against colliding band buckets), so the size dispatch's
-            # routing count would be a wasted extra job on EVERY batch
-            verified = verify_pairs(pairs, all_sigs, cfg,
-                                    broadcast_pairs=True) \
+            # AQE picks the payload join strategy from the batch's
+            # runtime pair count (a micro-batch's pair list is small and
+            # becomes a broadcast)
+            verified = verify_pairs(pairs, all_sigs, cfg) \
                 .withColumn("batch_id", F.lit(batch_id))
             if maintain_labels:
                 # two consumers below (pairs write + label fold): pin once

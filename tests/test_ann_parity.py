@@ -73,7 +73,7 @@ def test_oracle_accuracy_vs_ground_truth(model, fx):
         assert dists == sorted(dists)
 
 
-def test_spark_ann_matches_oracle(spark, model, fx):
+def _assert_spark_ann_matches_oracle(spark, model, fx):
     from distributed_lsh_spark.operators.ann import ann_search_spark
 
     k = 5
@@ -93,11 +93,30 @@ def test_spark_ann_matches_oracle(spark, model, fx):
                 expect[(r.query_id, rank)] = (idx, dist)
 
     got_map = {(r["query_id"], r["rank"]): (r["point_id"], r["dist"]) for r in got}
+    assert expect, "no query finished — fixture too weak"
     assert set(got_map) == set(expect)
     for key, (idx, dist) in expect.items():
         gi, gd = got_map[key]
         assert gi == idx
         assert math.isclose(gd, dist, rel_tol=1e-9)
+
+
+def test_spark_ann_matches_oracle(spark, model, fx):
+    _assert_spark_ann_matches_oracle(spark, model, fx)
+
+
+def test_spark_ann_distributed_state_matches_oracle(spark, model, fx,
+                                                    monkeypatch):
+    """With ANN_DRIVER_STATE_MAX_ROWS at 0 every search keeps its
+    per-radius state distributed (checkpointed DataFrames, AQE off for
+    the loop).  That mode must return the oracle's rows exactly and leave
+    spark.sql.adaptive.enabled as it found it."""
+    import distributed_lsh_spark.operators.ann as A
+
+    monkeypatch.setattr(A, "ANN_DRIVER_STATE_MAX_ROWS", 0)
+    aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
+    _assert_spark_ann_matches_oracle(spark, model, fx)
+    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe_before
 
 
 def test_bucket_ids_reproducible_without_numpy():

@@ -597,11 +597,10 @@ def test_manifest_carries_partition_lineage(spark, tmp_path):
 
 def test_parquet_bucketed_stage_colocates_verify_joins(spark, tmp_path):
     """bucket_by on the PARQUET backend writes a native Spark bucketed
-    table: the verify stage's shuffle route (the at-scale path above
-    BROADCAST_PAIRS_MAX_ROWS) joins the payload sides with NO Exchange on
-    the bucketed scans, and resume + bare-directory reads return the same
-    rows (VERDICT r4 item 6 — the Iceberg bucket(N, doc_id) co-location
-    contract, demonstrable locally)."""
+    table: the verify stage's payload joins, planned as sort-merge joins,
+    read the bucketed scans with NO Exchange, and resume + bare-directory
+    reads return the same rows (VERDICT r4 item 6 — the Iceberg
+    bucket(N, doc_id) co-location contract, demonstrable locally)."""
     from pyspark.sql import functions as F
 
     from distributed_lsh_spark.conf import DEFAULT_CONFIG as CFG
@@ -643,10 +642,10 @@ def test_parquet_bucketed_stage_colocates_verify_joins(spark, tmp_path):
         # static plan + no auto-broadcast so Exchange counts are stable
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        v_bucketed = verify_pairs(pairs, sigs2, CFG, broadcast_pairs=False,
+        v_bucketed = verify_pairs(pairs, sigs2, CFG,
                                   keep_below_threshold=True)
         plan_b = v_bucketed._jdf.queryExecution().executedPlan().toString()
-        v_plain = verify_pairs(pairs, bare, CFG, broadcast_pairs=False,
+        v_plain = verify_pairs(pairs, bare, CFG,
                                keep_below_threshold=True)
         plan_p = v_plain._jdf.queryExecution().executedPlan().toString()
     finally:

@@ -24,7 +24,7 @@ def micro(spark):
         7: "Punct!!! only,,, tokens??? here... alpha BETA gamma DELTA epsilon zeta eta theta iota kappa",
     }
     df = spark.createDataFrame(list(docs.items()), "doc_id long, text string")
-    st = build_stages(df, CFG, with_simhash_col=True)
+    st = build_stages(df, CFG)
     oc = DedupOracle(CFG, docs)
     return st, oc
 
@@ -133,52 +133,31 @@ def test_hamming_pairs_match_oracle(spark, micro):
         assert brute[k] == h
 
 
-def test_verify_shuffle_join_path_matches_broadcast(micro):
-    """The cluster-scale escape hatch (verify_pairs broadcast_pairs=False,
-    paired with bucketed checkpoints per SCALE.md) returns the identical
-    verified set as the default broadcast path."""
+@pytest.mark.parametrize("bc_threshold", [None, "-1"],
+                         ids=["session-default", "no-broadcast"])
+def test_verify_join_matches_oracle_under_aqe(spark, micro, bc_threshold):
+    """verify_pairs builds one plan and leaves the join strategy to AQE:
+    with the session's auto-broadcast threshold the tiny pair list may
+    broadcast; with auto-broadcast off AQE keeps the sort-merge join.
+    Either way the verified set equals the oracle's."""
     st, oc = micro
     from distributed_lsh_spark.operators.verify import verify_pairs
 
-    got = {(r["id_a"], r["id_b"]): r["jaccard"]
-           for r in verify_pairs(st.pairs, st.signatures, CFG,
-                                 broadcast_pairs=False).collect()}
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    try:
+        if bc_threshold is not None:
+            spark.conf.set(key, bc_threshold)
+        verified = verify_pairs(st.pairs, st.signatures, CFG)
+        got = {(r["id_a"], r["id_b"]): r["jaccard"]
+               for r in verified.collect()}
+        if bc_threshold == "-1":
+            plan = verified._jdf.queryExecution().executedPlan().toString()
+            assert "SortMergeJoin" in plan
+            assert "BroadcastHashJoin" not in plan
+    finally:
+        spark.conf.set(key, old)
     expect = oc.verified_pairs()
     assert set(got) == set(expect)
     for k, v in expect.items():
         assert math.isclose(got[k], v, rel_tol=1e-12)
-
-
-def test_verify_auto_route_dispatches_on_pair_count(micro, monkeypatch):
-    """broadcast_pairs=None (the default every flagship path now uses)
-    routes on the materialized pair count: broadcast at or under
-    BROADCAST_PAIRS_MAX_ROWS, shuffle join above — with identical
-    verified output either way (VERDICT r4 item 1: the unconditional
-    broadcast was the one remaining flagship scale-killer)."""
-    st, oc = micro
-    import distributed_lsh_spark.operators.verify as V
-
-    expect = oc.verified_pairs()
-
-    # default threshold: micro's pair set is tiny -> broadcast route
-    got = {(r["id_a"], r["id_b"]): r["jaccard"]
-           for r in V.verify_pairs(st.pairs, st.signatures, CFG).collect()}
-    assert V.verify_pairs.last_route == "broadcast"
-    assert set(got) == set(expect)
-
-    # threshold forced to 0 -> every non-empty pair set takes the
-    # shuffle join; results must be identical
-    monkeypatch.setattr(V, "BROADCAST_PAIRS_MAX_ROWS", 0)
-    got2 = {(r["id_a"], r["id_b"]): r["jaccard"]
-            for r in V.verify_pairs(st.pairs, st.signatures, CFG).collect()}
-    assert V.verify_pairs.last_route == "shuffle"
-    assert got2 == got
-    for k, v in expect.items():
-        assert math.isclose(got2[k], v, rel_tol=1e-12)
-
-    # an explicit n_pairs hint skips the routing count and still routes
-    got3 = {(r["id_a"], r["id_b"]): r["jaccard"]
-            for r in V.verify_pairs(st.pairs, st.signatures, CFG,
-                                    n_pairs=10**9).collect()}
-    assert V.verify_pairs.last_route == "shuffle"
-    assert got3 == got

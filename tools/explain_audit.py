@@ -55,12 +55,13 @@ AUDITED = [
 
 
 def _bucketed_verify_audit(spark, out, findings) -> None:
-    """The at-scale verify route's co-location contract, asserted on the
+    """The verify payload joins' co-location contract, asserted on the
     plan: a signatures checkpoint written with bucket_by=(N, doc_id)
     (Iceberg bucket transform on a cluster; native Spark bucketed table
-    on the Parquet backend) feeds verify_pairs(broadcast_pairs=False)
-    with NO Exchange on either payload scan — only the bare 16-byte pair
-    list shuffles.  Mirrors tests/test_extract_checkpoint_misc.py::
+    on the Parquet backend) feeds verify_pairs with NO Exchange on either
+    payload scan — only the bare 16-byte pair list shuffles.  AQE and
+    auto-broadcast are off here so the static sort-merge plan shows.
+    Mirrors tests/test_extract_checkpoint_misc.py::
     test_parquet_bucketed_stage_colocates_verify_joins."""
     import tempfile
 
@@ -85,17 +86,16 @@ def _bucketed_verify_audit(spark, out, findings) -> None:
     try:
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        v = verify_pairs(pairs, sigs, CFG, broadcast_pairs=False,
-                         keep_below_threshold=True)
+        v = verify_pairs(pairs, sigs, CFG, keep_below_threshold=True)
         plan = v._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bc)
     n_ex = plan.count("Exchange")
     ok = "Bucketed: true" in plan and n_ex == 2
-    out.write("\n## verify shuffle route over a bucketed signatures "
-              "checkpoint\n\nbucket_by=(16, doc_id) -> "
-              "verify_pairs(broadcast_pairs=False): "
+    out.write("\n## verify payload joins over a bucketed signatures "
+              "checkpoint\n\nAQE picks the join at runtime; with it off, "
+              "bucket_by=(16, doc_id) -> verify_pairs: "
               f"{n_ex} Exchanges (both on the bare pair list), "
               f"payload scans bucketed={'Bucketed: true' in plan}.\n\n"
               f"```\n{plan}\n```\n")
